@@ -2066,7 +2066,10 @@ class QdrantSparkClient:
         grouped = planner.plan_groups(
             req, group_by_field=group_by, groups=limit,
             group_size=group_size, lookup=lookup, lookup_cols=lookup_cols)
-        rows = self._rows_as_dicts(grouped)
+        # group_by returns its rows unordered: best group first, best hit
+        # first within a group, sorted in Python (no Spark sort or exchange)
+        rows = sorted(self._rows_as_dicts(grouped),
+                      key=lambda r: (r["group_rank"], r["rank_in_group"]))
         planner.close()
         groups: dict[Any, PointGroup] = {}
         hydr = {p.id: p for p in self._hydrate(

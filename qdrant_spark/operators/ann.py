@@ -218,6 +218,16 @@ def ivf_search(
     )
 
 
+def _probe_map(Qm: np.ndarray, centroids: np.ndarray, nprobe: int):
+    """Each query's ``nprobe`` centroid-nearest clusters (squared euclid
+    in raw vector space): the probed union, sorted, and the cluster ->
+    probing query rows map the cluster-masked kernel takes."""
+    d = ((Qm[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
+    probes = np.argsort(d, axis=1)[:, :nprobe]
+    used = sorted({int(c) for row in probes for c in row})
+    return used, {c: np.where((probes == c).any(axis=1))[0] for c in used}
+
+
 def ivf_search_batch(
     index: IvfIndex,
     queries: DataFrame,
@@ -238,98 +248,19 @@ def ivf_search_batch(
     only its probing queries. No pair materialization: a join would ship
     every point duplicated per probing query. Exact per-query top-k window
     finishes, so full probe == exact batch scan."""
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    from qdrant_spark.operators.knn import (
-        larger_is_better, score_block, score_order,
-    )
+    from qdrant_spark.operators.knn import _masked_code_topk
 
     # plain collect (see knn._matmul_knn): coalesce(1) serializes every
     # python partition through one worker, ~2.6s fixed overhead
     q_rows = queries.select(qid_col, qvec_col).collect()
     qids = [r[qid_col] for r in q_rows]
     Qm = np.array([list(r[qvec_col]) for r in q_rows], dtype=np.float64)
-    # (nq, K) squared euclid to centroids -> nprobe smallest per query
-    d = ((Qm[:, None, :] - index.centroids[None, :, :]) ** 2).sum(axis=2)
-    probes = np.argsort(d, axis=1)[:, :nprobe]
-    used = sorted({int(c) for row in probes for c in row})
-    cluster_q = {
-        int(c): np.where((probes == c).any(axis=1))[0] for c in used
-    }
-
-    sc = queries.sparkSession.sparkContext
-    bq = sc.broadcast((np.asarray(qids), Qm, cluster_q))
-    bigger_better = larger_is_better(metric)
-
+    used, cluster_q = _probe_map(Qm, index.centroids, nprobe)
     pruned = index.assigned.filter(F.col("__cluster").isin(used))
-    sel = pruned.select(index.id_col, index.vec_col, "__cluster")
-    out_schema = T.StructType(
-        [
-            T.StructField(qid_col, queries.schema[qid_col].dataType),
-            T.StructField(index.id_col, sel.schema[index.id_col].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    id_col = index.id_col
-
-    def score_batches(batches):
-        import pyarrow as pa
-
-        qid_arr, Qm_, cq = bq.value
-        acc = []
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            vec = batch.column(1)
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            V = vec.flatten().to_numpy(zero_copy_only=False) \
-                .reshape(n, -1).astype(np.float64, copy=False)
-            cl = batch.column(2).to_numpy(zero_copy_only=False)
-            for c in np.unique(cl):
-                qidx = cq.get(int(c))
-                if qidx is None or len(qidx) == 0:
-                    continue
-                mask = cl == c
-                S = score_block(V[mask], Qm_[qidx], metric)
-                nb = S.shape[0]
-                kk = min(k, nb)
-                if kk < nb:
-                    part = np.argpartition(
-                        -S if bigger_better else S, kk - 1, axis=0
-                    )[:kk]
-                else:
-                    part = np.tile(np.arange(nb)[:, None], (1, len(qidx)))
-                rows = part.ravel(order="F")
-                qrep = np.repeat(qidx, part.shape[0])
-                acc.append((qrep, ids[mask][rows],
-                            S[rows, np.repeat(np.arange(len(qidx)), part.shape[0])]))
-        if not acc:
-            return
-        qi = np.concatenate([a[0] for a in acc])
-        ii = np.concatenate([a[1] for a in acc])
-        ss = np.concatenate([a[2] for a in acc])
-        key_s = -ss if bigger_better else ss
-        order = np.lexsort((ii, key_s, qi))
-        qi, ii, ss = qi[order], ii[order], ss[order]
-        uq, starts = np.unique(qi, return_index=True)
-        rank = np.arange(len(qi)) - starts[np.searchsorted(uq, qi)]
-        keep = rank < k
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(qid_arr[qi[keep]]), pa.array(ii[keep]),
-             pa.array(ss[keep], type=pa.float64())],
-            names=[qid_col, id_col, "score"],
-        )
-
-    scored = sel.mapInArrow(score_batches, out_schema)
-    w = Window.partitionBy(qid_col).orderBy(*score_order(metric, id_col=id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _masked_code_topk(
+        pruned, code_col=index.vec_col, id_col=index.id_col, qids=qids,
+        Q=Qm, cluster_q=cluster_q, k=k, metric=metric, qid_col=qid_col,
+        qid_type=queries.schema[qid_col].dataType)
 
 
 def recall_at_k(

@@ -42,8 +42,10 @@ def group_by(
 ) -> DataFrame:
     """Group a scored DataFrame (id, score, group_key[, qid]).
 
-    Returns (qid?, group_value, id, score, rank_in_group, group_rank),
-    best group first, best hit first within group.
+    Returns (qid?, group_value, id, score, rank_in_group, group_rank)
+    rows in no particular order: ``group_rank`` (1 = best group) and
+    ``rank_in_group`` (1 = best hit) carry the ranking, and callers that
+    present groups sort by them.
     """
     typ = scored.schema[group_key].dataType
     gv = (

@@ -264,6 +264,39 @@ def score_block(M, Qm, metric: str, qnorm=None):
     return S
 
 
+def block_topk(S, k: int, bigger_better: bool):
+    """Per-query top-k of one (n, q) score block, columnwise
+    ``argpartition`` in one call (ties arbitrary — the finish restores
+    the exact order). Returns (rows, qcol): <= k row indices per query,
+    query-major, and each row's query column."""
+    import numpy as np
+
+    n, nq = S.shape
+    kk = min(k, n)
+    if kk < n:
+        part = np.argpartition(-S if bigger_better else S, kk - 1,
+                               axis=0)[:kk]
+    else:
+        part = np.tile(np.arange(n)[:, None], (1, nq))
+    return part.ravel(order="F"), np.repeat(np.arange(nq), part.shape[0])
+
+
+def topk_rows(qidx, ids, scores, k: int, bigger_better: bool):
+    """Exact per-query top-k over accumulated candidate rows, (score
+    direction, then id asc) — one lexsort, query-major. Returns the kept
+    (qidx, ids, scores)."""
+    import numpy as np
+
+    key_s = -scores if bigger_better else scores
+    order = np.lexsort((ids, key_s, qidx))  # qidx major, then score, id
+    qidx, ids, scores = qidx[order], ids[order], scores[order]
+    # rank within query = position - first position of that query
+    uq, starts = np.unique(qidx, return_index=True)
+    rank = np.arange(len(qidx)) - starts[np.searchsorted(uq, qidx)]
+    keep = rank < k
+    return qidx[keep], ids[keep], scores[keep]
+
+
 def _matmul_knn(
     pts: DataFrame,
     queries: DataFrame,
@@ -319,7 +352,7 @@ def _matmul_knn(
         import pyarrow as pa
 
         qids_l, Qm = bq.value
-        nq, dim = Qm.shape
+        dim = Qm.shape[1]
         qnorm = np.linalg.norm(Qm, axis=1) if metric == "cosine" else None
         qid_arr = np.asarray(qids_l)
         acc_q: list[np.ndarray] = []   # query INDEX per candidate row
@@ -342,36 +375,21 @@ def _matmul_knn(
                 flat = vec.flatten().to_numpy(zero_copy_only=False)
                 M = flat.reshape(n, dim).astype(np.float64, copy=False)
             S = score_block(M, Qm, metric, qnorm=qnorm)
-            kk = min(k, n)
-            if kk < n:
-                # top-kk by score per query (columnwise argpartition, one call)
-                part = np.argpartition(-S if bigger_better else S, kk - 1, axis=0)[:kk]
-            else:
-                part = np.tile(np.arange(n)[:, None], (1, nq))
-            rows = part.ravel(order="F")                 # kk rows per query
-            qidx = np.repeat(np.arange(nq), part.shape[0])
+            rows, qidx = block_topk(S, k, bigger_better)
             acc_q.append(qidx)
             acc_i.append(ids[rows])
             acc_s.append(S[rows, qidx])
 
         if not acc_q:
             return
-        qidx = np.concatenate(acc_q)
-        ids = np.concatenate(acc_i)
-        scores = np.concatenate(acc_s)
-        # exact per-query top-k incl. id tie-break, one lexsort over candidates
-        key_s = -scores if bigger_better else scores
-        order = np.lexsort((ids, key_s, qidx))  # qidx major, then score, id
-        qidx, ids, scores = qidx[order], ids[order], scores[order]
-        # rank within query = position - first position of that query
-        starts = np.searchsorted(qidx, np.arange(len(qids_l)))
-        rank = np.arange(len(qidx)) - starts[qidx]
-        keep = rank < k
+        qidx, ids, scores = topk_rows(
+            np.concatenate(acc_q), np.concatenate(acc_i),
+            np.concatenate(acc_s), k, bigger_better)
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(qid_arr[qidx[keep]]),
-                pa.array(ids[keep]),
-                pa.array(scores[keep], type=pa.float64()),
+                pa.array(qid_arr[qidx]),
+                pa.array(ids),
+                pa.array(scores, type=pa.float64()),
             ],
             names=[qid_col, id_col, "score"],
         )
@@ -386,6 +404,77 @@ def _matmul_knn(
     return (
         scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
     )
+
+
+def _masked_code_topk(frame, *, code_col, id_col, qids, Q, cluster_q,
+                      k, metric, vec_decode=None, qid_col="__qid",
+                      qid_type=None):
+    """Cluster-masked batched scan — the one IVF batch kernel: ONE pass
+    over a (probe-union-pruned) frame carrying ``__cluster`` in which
+    each cluster block scores against ONLY the queries that probed it
+    (``cluster_q``: cluster -> row indices into ``Q``). Float vectors
+    reshape from the flat Arrow buffer; ``vec_decode`` (the quantized
+    decode table's hook) decodes codes of any kind. Per-partition
+    per-query top-k, then the exact (score direction, id) window, so a
+    full probe equals the exact batch scan and candidates match the
+    single-request plans bit-for-bit."""
+    import numpy as np
+
+    sc = frame.sparkSession.sparkContext
+    bq = sc.broadcast((np.asarray(qids), np.asarray(Q, dtype=np.float64),
+                       cluster_q))
+    bigger = larger_is_better(metric)
+    sel = frame.select(id_col, code_col, "__cluster")
+    out_schema = T.StructType([
+        T.StructField(qid_col, qid_type or T.LongType()),
+        T.StructField(id_col, sel.schema[id_col].dataType),
+        T.StructField("score", T.DoubleType()),
+    ])
+
+    def score_batches(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        qid_arr, Qm, cq = bq.value
+        acc_q, acc_i, acc_s = [], [], []
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            ids = batch.column(0).to_numpy(zero_copy_only=False)
+            vec = batch.column(1)
+            if isinstance(vec, pa.ChunkedArray):
+                vec = vec.combine_chunks()
+            if vec_decode is not None:
+                M = vec_decode(vec, n)
+            else:
+                M = vec.flatten().to_numpy(zero_copy_only=False) \
+                    .reshape(n, -1).astype(np.float64, copy=False)
+            cl = batch.column(2).to_numpy(zero_copy_only=False)
+            for c in np.unique(cl):
+                qidx = cq.get(int(c))
+                if qidx is None or len(qidx) == 0:
+                    continue
+                mask = cl == c
+                S = score_block(M[mask], Qm[qidx], metric)
+                rows, qcol = block_topk(S, k, bigger)
+                acc_q.append(np.asarray(qidx)[qcol])
+                acc_i.append(ids[mask][rows])
+                acc_s.append(S[rows, qcol])
+        if not acc_q:
+            return
+        qi, ii, ss = topk_rows(np.concatenate(acc_q), np.concatenate(acc_i),
+                               np.concatenate(acc_s), k, bigger)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(qid_arr[qi]), pa.array(ii),
+             pa.array(ss, type=pa.float64())],
+            names=[qid_col, id_col, "score"],
+        )
+
+    scored = sel.mapInArrow(score_batches, out_schema)
+    w = Window.partitionBy(qid_col).orderBy(
+        *score_order(metric, id_col=id_col))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
 
 
 def rowwise_score_topk(
@@ -464,13 +553,7 @@ def rowwise_score_topk(
             if k is not None:
                 # per-batch per-query top-k prune (exactness restored by
                 # the final window); lexsort: qid major, then score, id
-                key_s = -s if bigger_better else s
-                order = np.lexsort((ids, key_s, qids))
-                qids, ids, s = qids[order], ids[order], s[order]
-                uq, starts = np.unique(qids, return_index=True)
-                rank = np.arange(len(qids)) - starts[np.searchsorted(uq, qids)]
-                keep = rank < k
-                qids, ids, s = qids[keep], ids[keep], s[keep]
+                qids, ids, s = topk_rows(qids, ids, s, k, bigger_better)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(qids), pa.array(ids),
                  pa.array(s, type=pa.float64())],

@@ -5,13 +5,33 @@ MaxSim semantics (MultiVectorComparator::MaxSim, lib/segment/src/types.rs:
 multi_metric_query_scorer.rs): score(Q, D) = sum over q in Q of
 max over d in D of sim(q, d).
 
+Every token storage kind scores through ONE scan kernel and ONE pair
+kernel; only the per-kind decode hook (:func:`_mv_quant_prep`) differs.
+The hook maps an Arrow batch's first-level-flattened token column(s) to
+a float64 (tokens, dim) matrix in scoring space: float tokens decode by
+identity (cosine-normalized, zero rows guarded), int8 / packed-bit / PQ
+/ TurboQuant codes by their reconstruction — the same contract as the
+reference's vector-kind-agnostic quantized scorers
+(quantized_vectors.rs).
+
+- Scan kernel (:func:`_maxsim_scan`, per-batch body
+  :func:`maxsim_batch_topk`): all query tokens concatenate into one
+  matrix; each batch runs one BLAS call per 128 query tokens,
+  ``np.maximum.reduceat`` over the Arrow list offsets (per-doc segment
+  max, no per-doc python loop) and ``np.add.reduceat`` over the query
+  token columns (per-query sum), then cuts a per-batch per-query top-k
+  in the final (score desc, id asc) order. :func:`maxsim_knn` finishes
+  it with one global top-k (TakeOrderedAndProject);
+  :func:`maxsim_knn_batch` and :func:`maxsim_quant_coarse_batch` with a
+  per-query window.
+- Pair kernel (:func:`maxsim_quant_pair_topk`): scores a (qid, id)
+  candidate pair set, each doc only against its own query, with the
+  same :func:`maxsim_scores` arithmetic; :func:`maxsim_pair_topk` is its
+  float-token call.
+
 The Column implementation (functions/distances.maxsim) nests two
 higher-order functions and runs interpreted — fine for a rescore of a
-bounded candidate set, wrong for a corpus scan. This operator is the scan
-path: one mapInArrow pass where each batch's doc token vectors flatten
-into a single (total_tokens, dim) matrix, one BLAS matmul against the
-query token matrix, and `np.maximum.reduceat` over the Arrow list offsets
-computes the per-doc segment max — no per-doc python loop.
+bounded candidate set, wrong for a corpus scan.
 """
 
 from __future__ import annotations
@@ -25,6 +45,142 @@ from pyspark.sql import types as T
 
 
 from qdrant_spark.operators.knn import score_order
+
+
+def _norm_rows(M: np.ndarray) -> np.ndarray:
+    """Cosine row normalization; an all-zero row stays zero (it scores
+    0 against everything instead of NaN)."""
+    n = np.linalg.norm(M, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return M / n
+
+
+def maxsim_scores(Tm: np.ndarray, starts: np.ndarray, Q: np.ndarray,
+                  qstarts: np.ndarray) -> np.ndarray:
+    """(docs, queries) MaxSim sums, NumPy only. ``Tm`` stacks the docs'
+    token rows (doc i owns the rows from ``starts[i]`` to the next
+    start; no doc is empty), ``Q`` stacks every query's token rows the
+    same way with ``qstarts``. Per-doc segment max over doc tokens, then
+    per-query sum over its token columns. The query axis runs in chunks
+    of 128 tokens: the full (batch_tokens x all_qtokens) matrix would be
+    100s of MB per worker at 64 queries (first-rep GC thrash measured
+    40 s), and the segment max shrinks each chunk to (docs, chunk) before
+    the next BLAS call."""
+    chunk = 128
+    blocks = []
+    for c0 in range(0, Q.shape[0], chunk):
+        S = Tm @ Q[c0:c0 + chunk].T            # (tokens, <=chunk)
+        blocks.append(np.maximum.reduceat(S, starts, axis=0))
+    M = blocks[0] if len(blocks) == 1 \
+        else np.concatenate(blocks, axis=1)    # (docs, qtokens)
+    return np.add.reduceat(M, qstarts, axis=1)
+
+
+def maxsim_batch_topk(ids: np.ndarray, Tm: np.ndarray, tok_off: np.ndarray,
+                      Q: np.ndarray, qstarts: np.ndarray,
+                      offsets: np.ndarray, scales: np.ndarray, k: int,
+                      dedup_ids: bool):
+    """The per-Arrow-batch body of the scan kernel, NumPy only: MaxSim of
+    the batch's docs (token rows ``Tm``, Arrow list offsets ``tok_off``)
+    against every query, the per-query affine finish ``(maxsim + offset)
+    * scale`` (identity except asymmetric binary codes, see
+    :func:`_mv_quant_prep`), optional in-batch id dedup, and the
+    per-query top-``k``. Returns (qid, id, score) arrays."""
+    starts = tok_off[:-1] - tok_off[0]
+    assert (np.diff(tok_off) > 0).all()  # empty docs never reach a scan
+    scores = (maxsim_scores(Tm, starts, Q, qstarts) + offsets) * scales
+    n, nq = scores.shape
+    if dedup_ids:
+        # invlist copies score identically — keep one per doc BEFORE the
+        # cut so copies can't crowd out distinct docs
+        _, keep = np.unique(ids, return_index=True)
+        if len(keep) < n:
+            ids, scores, n = ids[keep], scores[keep], len(keep)
+    kk = min(k, n)
+    if kk < n:
+        # per-batch top-k must follow the SAME total order as the final
+        # ranking — (score desc, id asc) — or tied boundary docs (endemic
+        # for integer-valued binary coarse scores) get dropped by
+        # argpartition's arbitrary tie choice before the finish sees them
+        sel_rows, sel_q = [], []
+        for j in range(nq):
+            s = scores[:, j]
+            part = np.argpartition(-s, kk - 1)[:kk]
+            kth = s[part].min()
+            strict = np.where(s > kth)[0]
+            tied = np.where(s == kth)[0]
+            tied = tied[np.argsort(ids[tied], kind="stable")][
+                :kk - len(strict)]
+            rows_j = np.concatenate([strict, tied])
+            sel_rows.append(rows_j)
+            sel_q.append(np.full(len(rows_j), j, dtype=np.int64))
+        rows = np.concatenate(sel_rows)
+        qid = np.concatenate(sel_q)
+    else:
+        rows = np.tile(np.arange(n), nq)
+        qid = np.repeat(np.arange(nq, dtype=np.int64), n)
+    return qid, ids[rows], scores[rows, qid]
+
+
+def _batch_tokens(batch, first: int, ncols: int):
+    """One Arrow batch's token-list columns ``first .. first+ncols-1``
+    flattened one level (doc -> token), plus the shared outer list
+    offsets."""
+    import pyarrow as pa
+
+    flats, tok_off = [], None
+    for ci in range(first, first + ncols):
+        col = batch.column(ci)
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        if tok_off is None:
+            tok_off = col.offsets.to_numpy(zero_copy_only=False)
+        flats.append(col.flatten())
+    return flats, tok_off
+
+
+def _maxsim_scan(sel: DataFrame, Qtoks, decode, offsets, scales, k: int,
+                 dedup_ids: bool) -> DataFrame:
+    """THE MaxSim scan kernel: one ``mapInArrow`` pass over ``sel`` (id,
+    then the token column(s) ``decode`` reads) scoring a batch of
+    queries per Arrow batch via :func:`maxsim_batch_topk`. Returns the
+    per-batch top-k (__qid, id, score) rows; callers finish with a global
+    top-k or a per-query window."""
+    Qall = np.concatenate(Qtoks, axis=0)
+    # per-query token column offsets for the reduceat over columns
+    qstarts = np.cumsum([0] + [len(t) for t in Qtoks[:-1]])
+    # broadcast only the plain arrays (sc.broadcast pickles with the
+    # stock pickler, which can't take the per-kind decode closure); the
+    # decode fn + its encoder state ride the cloudpickled task closure
+    bq = sel.sparkSession.sparkContext.broadcast(
+        (Qall, qstarts, offsets, scales))
+    id_col = sel.columns[0]
+    ncols = len(sel.columns) - 1
+    out_schema = T.StructType([
+        T.StructField("__qid", T.LongType()),
+        T.StructField(id_col, sel.schema[id_col].dataType),
+        T.StructField("score", T.DoubleType()),
+    ])
+
+    def score_batches(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        Qm, qs, offs, scl = bq.value
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids = batch.column(0).to_numpy(zero_copy_only=False)
+            flats, tok_off = _batch_tokens(batch, 1, ncols)
+            qid, hit, score = maxsim_batch_topk(
+                ids, decode(flats), tok_off, Qm, qs, offs, scl, k,
+                dedup_ids)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(qid), pa.array(hit),
+                 pa.array(score, type=pa.float64())],
+                names=["__qid", id_col, "score"],
+            )
+
+    return sel.mapInArrow(score_batches, out_schema)
 
 
 def maxsim_knn(
@@ -41,63 +197,14 @@ def maxsim_knn(
     multivector. ``metric``: dot or cosine (both larger-is-better, as the
     reference restricts multivectors to sim metrics). ``dedup_ids`` keeps
     one row per id after scoring (for the invlist layout, where a doc is
-    stored once per token cluster)."""
+    stored once per token cluster). The scan kernel with one query and
+    the identity decode, finished by one global top-k."""
     if metric not in ("dot", "cosine"):
         raise ValueError("maxsim supports dot/cosine")
-    Qm = np.asarray([list(t) for t in query_multivector], dtype=np.float64)
-    if metric == "cosine":
-        Qm = Qm / np.linalg.norm(Qm, axis=1, keepdims=True)
-    sc = points.sparkSession.sparkContext
-    bq = sc.broadcast(Qm)
-
-    sel = points.filter(F.col(mv_col).isNotNull()).filter(
-        F.size(mv_col) > 0
-    ).select(id_col, mv_col)
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, sel.schema[id_col].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        Q = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            mv = batch.column(1)
-            if isinstance(mv, pa.ChunkedArray):
-                mv = mv.combine_chunks()
-            # outer list: docs -> token vectors; inner list: floats
-            inner = mv.flatten()                    # list<float> per token
-            # token count per doc from the outer offsets
-            outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-            tok_counts = np.diff(outer_off)
-            vals = inner.flatten().to_numpy(zero_copy_only=False)
-            dim = Q.shape[1]
-            Tm = vals.reshape(-1, dim).astype(np.float64, copy=False)
-            if metric == "cosine":
-                norms = np.linalg.norm(Tm, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                Tm = Tm / norms
-            S = Tm @ Q.T                            # (total_tokens, tq)
-            starts = outer_off[:-1] - outer_off[0]
-            # segment max per doc per query token, then sum over qtokens
-            # reduceat on an empty segment would grab the next one; empty
-            # docs were filtered out Spark-side (size > 0)
-            assert (tok_counts > 0).all()
-            M = np.maximum.reduceat(S, starts, axis=0)
-            scores = M.sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(scores, type=pa.float64())],
-                names=[id_col, "score"],
-            )
-
-    scored = sel.mapInArrow(score_batches, out_schema)
+    sel, Qtoks, decode, offsets, scales = _mv_quant_prep(
+        points.select(id_col, mv_col), [query_multivector], metric)
+    scored = _maxsim_scan(sel, Qtoks, decode, offsets, scales, k,
+                          dedup_ids).select(id_col, "score")
     if dedup_ids:
         # invlist layout stores one row per (doc, token-cluster): a doc
         # probed through several clusters scores identically on each
@@ -433,9 +540,7 @@ def _probe_clusters(index: MaxSimIvf, query_multivector, *,
     invlist scan path."""
     Qm = np.asarray([list(t) for t in query_multivector], dtype=np.float64)
     if metric == "cosine":
-        n = np.linalg.norm(Qm, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        Qm = Qm / n
+        Qm = _norm_rows(Qm)
     # (tq, n_clusters) squared distances, top-nprobe per query token
     d2 = ((Qm[:, None, :] - index.centroids[None, :, :]) ** 2).sum(axis=2)
     per_tok = np.argsort(d2, axis=1)[:, :nprobe]
@@ -729,75 +834,11 @@ def maxsim_knn_sq(
     metric: str = "dot",
     rescore: bool = True,
 ) -> DataFrame:
-    """Two-stage MaxSim: coarse Arrow scan over the int8 token codes
-    (decode is one affine on the flat buffer, then the same one-BLAS-call
-    segment-max scoring as maxsim_knn) keeps ``ceil(k*oversampling)``
-    docs; the exact MaxSim rescore touches only those docs' float tokens
-    via a broadcast semi-join — QuantizationSearchParams semantics
-    applied to multivectors (the reference's quantized multivector
-    storage + raw rescore)."""
-    if metric not in ("dot", "cosine"):
-        raise ValueError("maxsim supports dot/cosine")
-    Qm = np.asarray([list(t) for t in query_multivector], dtype=np.float64)
-    if metric == "cosine":
-        nq = np.linalg.norm(Qm, axis=1, keepdims=True)
-        nq[nq == 0] = 1.0
-        Qm = Qm / nq
-    lo = index.lo
-    scale = (index.hi - index.lo) / 255.0
-    dim = len(lo)
-    sc = index.codes.sparkSession.sparkContext
-    bq = sc.broadcast((Qm, lo, scale))
-
-    sel = index.codes.select(index.id_col, "__msq")
-    id_col = index.id_col
-    out_schema = T.StructType([
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        Q, lo_, scale_ = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            mv = batch.column(1)
-            if isinstance(mv, pa.ChunkedArray):
-                mv = mv.combine_chunks()
-            inner = mv.flatten()                   # list<int8> per token
-            outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-            tok_counts = np.diff(outer_off)
-            vals = inner.flatten().to_numpy(zero_copy_only=False)
-            Tm = vals.reshape(-1, dim).astype(np.float64)
-            Tm = (Tm + 128.0) * scale_ + lo_       # affine decode
-            if metric == "cosine":
-                norms = np.linalg.norm(Tm, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                Tm = Tm / norms
-            S = Tm @ Q.T
-            starts = outer_off[:-1] - outer_off[0]
-            assert (tok_counts > 0).all()  # empties filtered at build
-            M = np.maximum.reduceat(S, starts, axis=0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids),
-                 pa.array(M.sum(axis=1), type=pa.float64())],
-                names=[id_col, "score"],
-            )
-
-    scored = sel.mapInArrow(score_batches, out_schema)
-    n_coarse = max(k, int(np.ceil(k * oversampling)))
-    coarse = scored.orderBy(*score_order(metric, id_col=id_col)) \
-        .limit(n_coarse)
-    if not rescore:
-        return coarse.limit(k)
-    cand_ids = F.broadcast(coarse.select(id_col))
-    cand = index.points.join(cand_ids, id_col, "left_semi")
-    return maxsim_knn(cand, query_multivector, k=k, metric=metric,
-                      mv_col=index.mv_col, id_col=id_col)
+    """SQ-kind alias of :func:`maxsim_knn_quant` (int8 affine decode
+    coarse stage + exact rescore)."""
+    return maxsim_knn_quant(index, query_multivector, k=k,
+                            oversampling=oversampling, metric=metric,
+                            rescore=rescore)
 
 
 @dataclass
@@ -906,79 +947,14 @@ def maxsim_knn_bq(
     metric: str = "dot",
     rescore: bool = True,
 ) -> DataFrame:
-    """Two-stage MaxSim over binary token codes: the coarse Arrow scan
-    unpacks each stored token's packed words to a ±1 matrix and scores
-    MaxSim against the same-as-storage ±1 query tokens with the one-
-    BLAS-call segment-max kernel (the per-token-pair dot IS
-    ext_dim - 2*hamming, the dense bq_search quantity); the exact MaxSim
-    rescore touches only the oversampled candidates' float tokens. Like
-    dense BQ, the coarse rank is metric-blind (±1-dot, larger better) —
-    the rescore applies the requested metric."""
-    from qdrant_spark.operators.quantize import _bq_ext_dim, bq_bits_np
-
-    if metric not in ("dot", "cosine"):
-        raise ValueError("maxsim supports dot/cosine")
-    Qpm = np.asarray(
-        [bq_bits_np(list(t), index.means, index.stds, index.encoding)
-         for t in query_multivector], dtype=np.float64) * 2.0 - 1.0
-    ext_dim = _bq_ext_dim(len(index.means), index.encoding)
-    sc = index.codes.sparkSession.sparkContext
-    bqv = sc.broadcast(Qpm)
-
-    sel = index.codes.select(index.id_col, "__mbq")
-    id_col = index.id_col
-    out_schema = T.StructType([
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        Q = bqv.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            mv = batch.column(1)
-            if isinstance(mv, pa.ChunkedArray):
-                mv = mv.combine_chunks()
-            inner = mv.flatten()                  # list<int64> per token
-            outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-            tok_counts = np.diff(outer_off)
-            words = inner.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64).reshape(-1, (ext_dim + 63) // 64) \
-                .view(np.uint64)
-            pm = np.empty((words.shape[0], ext_dim), dtype=np.float64)
-            col = 0
-            for w in range(words.shape[1]):
-                nb = min(64, ext_dim - col)
-                sh = np.arange(nb - 1, -1, -1, dtype=np.uint64)
-                pm[:, col:col + nb] = \
-                    ((words[:, w:w + 1] >> sh) & np.uint64(1))
-                col += nb
-            pm = pm * 2.0 - 1.0
-            S = pm @ Q.T                          # ext_dim - 2*hamming
-            starts = outer_off[:-1] - outer_off[0]
-            assert (tok_counts > 0).all()  # empties filtered at build
-            M = np.maximum.reduceat(S, starts, axis=0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids),
-                 pa.array(M.sum(axis=1), type=pa.float64())],
-                names=[id_col, "score"],
-            )
-
-    scored = sel.mapInArrow(score_batches, out_schema)
-    n_coarse = max(k, int(np.ceil(k * oversampling)))
-    coarse = scored.orderBy(*score_order("dot", id_col=id_col)) \
-        .limit(n_coarse)
-    if not rescore:
-        return coarse.limit(k)
-    cand_ids = F.broadcast(coarse.select(id_col))
-    cand = index.points.join(cand_ids, id_col, "left_semi")
-    return maxsim_knn(cand, query_multivector, k=k, metric=metric,
-                      mv_col=index.mv_col, id_col=id_col)
+    """BQ-kind alias of :func:`maxsim_knn_quant`: the coarse stage
+    unpacks packed words to ±1 (or raw 0/1 bits for the asymmetric
+    ``query_encoding``) and ranks by the metric-blind ±1-dot estimate,
+    with query tokens encoded as the index declares; the exact rescore
+    applies the requested metric."""
+    return maxsim_knn_quant(index, query_multivector, k=k,
+                            oversampling=oversampling, metric=metric,
+                            rescore=rescore)
 
 
 @dataclass
@@ -1226,47 +1202,63 @@ def persist_maxsim_quant(index, path: str):
 
 def _mv_quant_prep(index, queries: Sequence[Sequence[Sequence[float]]],
                    metric: str):
-    """Per-kind prep shared by the single-request and batched coarse
-    scans over quantized token storage: returns ``(code_cols, Qtoks,
-    decode, offsets)`` where ``Qtoks`` holds one per-query token matrix
-    ALREADY in scoring space, ``decode(flats)`` maps the first-level-
-    flattened Arrow code arrays of one batch to the float token matrix
+    """The per-kind decode table of the MaxSim kernels. ``index`` is a
+    quantized token index of any kind or, for exact float tokens, an
+    (id, multivector) DataFrame. Returns ``(sel, Qtoks, decode, offsets,
+    scales)``: ``sel`` is the (id, token column(s)) frame to scan, with
+    empty docs dropped; ``Qtoks`` holds one per-query token matrix
+    ALREADY in scoring space; ``decode(flats)`` maps the first-level-
+    flattened Arrow token arrays of one batch to the float token matrix
     in the same space (cosine-normalized when the kind scores the
-    requested metric; binary stays metric-blind ±1-dot like the dense
-    coarse stage), ``offsets`` is a per-query additive constant the
-    kernel applies AFTER the MaxSim reduction, and ``scales`` is a
-    per-query multiplicative constant applied last —
-    ``(maxsim + offset) * scale``. Both are identity (0 / 1) except for
-    the asymmetric binary encoding, whose per-pair quantity is affine
-    in the bits: there the dot, the max and the token sum all run over
-    INTEGER-valued float64 (every partial sum is an exact integer, so
-    the result is independent of accumulation order — BLAS blocking,
-    reduceat order, CPU kernel choice), and the single ``1/ranges``
-    division happens once at the end. The float path computed the same
-    rational with a per-dim division first, which made equal integer
-    totals differ in the last ulp by summation order — splitting exact
-    score ties (endemic for integer coarse quantities) differently
-    than the oracle's id-asc tie-break at the top-k cut. The per-kind
-    quantities are exactly the dense scorers'
-    (quantize.sq/pq/bq/tq_search) applied token-wise."""
+    requested metric — float tokens by identity; binary stays
+    metric-blind ±1-dot like the dense coarse stage); ``offsets`` is a
+    per-query additive constant the kernel applies AFTER the MaxSim
+    reduction, and ``scales`` is a per-query multiplicative constant
+    applied last — ``(maxsim + offset) * scale``. Both are identity
+    (0 / 1) except for the asymmetric binary encoding, whose per-pair
+    quantity is affine in the bits: there the dot, the max and the token
+    sum all run over INTEGER-valued float64 (every partial sum is an
+    exact integer, so the result is independent of accumulation order —
+    BLAS blocking, reduceat order, CPU kernel choice), and the single
+    ``1/ranges`` division happens once at the end. The float path
+    computed the same rational with a per-dim division first, which made
+    equal integer totals differ in the last ulp by summation order —
+    splitting exact score ties (endemic for integer coarse quantities)
+    differently than the oracle's id-asc tie-break at the top-k cut. The
+    quantized decodes are the dense decode table's
+    (quantize._quant_scan_setup) applied token-wise."""
     from qdrant_spark.operators.quantize import (
-        _BQ_QUERY_BITS, _TQ_CENTROIDS, _bq_ext_dim, _tq_rotate,
-        _tq_rotation_params, _tq_unpack, bq_bits_np,
-        bq_scalar_query_codes,
+        _BQ_QUERY_BITS, _bq_ext_dim, _bq_unpack, _pq_reconstruct,
+        _sq_decode, _tq_reconstruct, _tq_rotate, _tq_rotation_params,
+        bq_bits_np, bq_scalar_query_codes,
     )
 
     cosine = metric == "cosine"
     zeros = np.zeros(len(queries))
     ones = np.ones(len(queries))
 
-    def _norm_rows(M):
-        n = np.linalg.norm(M, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return M / n
+    def _raw_tokens():
+        Qtoks = [np.asarray([list(t) for t in q], dtype=np.float64)
+                 for q in queries]
+        return [_norm_rows(Q) for Q in Qtoks] if cosine else Qtoks
+
+    if isinstance(index, DataFrame):
+        # exact float tokens: the identity decode
+        id_col, mv_col = index.columns[:2]
+        sel = index.filter(F.col(mv_col).isNotNull()
+                           & (F.size(mv_col) > 0)).select(id_col, mv_col)
+        Qtoks = _raw_tokens()
+        dim = Qtoks[0].shape[1]
+
+        def decode(flats):
+            Tm = flats[0].flatten().to_numpy(zero_copy_only=False) \
+                .reshape(-1, dim).astype(np.float64, copy=False)
+            return _norm_rows(Tm) if cosine else Tm
+
+        return sel, Qtoks, decode, zeros, ones
 
     if isinstance(index, MaxSimBq):
         ext_dim = _bq_ext_dim(len(index.means), index.encoding)
-        nwords = (ext_dim + 63) // 64
         asym = index.query_encoding in _BQ_QUERY_BITS
         if asym:
             # asymmetric per-token encoding (BinaryQuantization
@@ -1305,42 +1297,24 @@ def _mv_quant_prep(index, queries: Sequence[Sequence[Sequence[float]]],
             scales = ones
 
         def decode(flats):
-            words = flats[0].flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64).reshape(-1, nwords).view(np.uint64)
-            pm = np.empty((words.shape[0], ext_dim), dtype=np.float64)
-            col = 0
-            for w in range(words.shape[1]):
-                nb = min(64, ext_dim - col)
-                sh = np.arange(nb - 1, -1, -1, dtype=np.uint64)
-                pm[:, col:col + nb] = \
-                    ((words[:, w:w + 1] >> sh) & np.uint64(1))
-                col += nb
-            return pm if asym else pm * 2.0 - 1.0
+            bits = _bq_unpack(flats[0], ext_dim)
+            return bits if asym else bits * 2.0 - 1.0
 
-        return ["__mbq"], Qtoks, decode, offsets, scales
+        return (index.codes.select(index.id_col, "__mbq"), Qtoks, decode,
+                offsets, scales)
 
     if isinstance(index, MaxSimPq):
         cb = index.codebooks
-        M_, _, dsub = cb.shape
-        dim = M_ * dsub
-        Qtoks = [np.asarray([list(t) for t in q], dtype=np.float64)
-                 for q in queries]
-        if cosine:
-            Qtoks = [_norm_rows(Q) for Q in Qtoks]
 
         def decode(flats):
-            codes = flats[0].flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int16).reshape(-1, M_) + 128
-            Tm = np.empty((codes.shape[0], dim), dtype=np.float64)
-            for m in range(M_):
-                Tm[:, m * dsub:(m + 1) * dsub] = cb[m][codes[:, m]]
+            Tm = _pq_reconstruct(flats[0], cb)
             return _norm_rows(Tm) if cosine else Tm
 
-        return ["__mpq"], Qtoks, decode, zeros, ones
+        return (index.codes.select(index.id_col, "__mpq"), _raw_tokens(),
+                decode, zeros, ones)
 
     if isinstance(index, MaxSimTq):
         bpc = index.bits_per_code
-        centroids = _TQ_CENTROIDS[bpc]
         pd_, dim_ = index.padded_dim, index.dim
         params = _tq_rotation_params(pd_, index.seed)
         Qtoks = []
@@ -1352,35 +1326,24 @@ def _mv_quant_prep(index, queries: Sequence[Sequence[Sequence[float]]],
             Qtoks.append(_norm_rows(Qm) if cosine else Qm)
 
         def decode(flats):
-            raw_objs = flats[0].to_numpy(zero_copy_only=False)
-            raw = np.frombuffer(b"".join(raw_objs), dtype=np.uint8) \
-                .reshape(len(raw_objs), -1)
-            idx = _tq_unpack(raw, bpc, pd_)
-            l2 = flats[1].to_numpy(zero_copy_only=False)
-            cn = np.maximum(flats[2].to_numpy(zero_copy_only=False), 1e-12)
-            # renorm reconstruction in ROTATED space: direction from the
-            # codebook, true token length from the stored l2 extra
-            Tm = centroids[idx] * (l2 / cn)[:, None]
+            # renorm reconstruction in ROTATED space (rotation preserves
+            # dots, so the query tokens rotated once above)
+            Tm = _tq_reconstruct(flats[0], flats[1], flats[2], bpc, pd_)
             return _norm_rows(Tm) if cosine else Tm
 
-        return ["__mtq", "__mtq_l2", "__mtq_cn"], Qtoks, decode, zeros, ones
+        return (index.codes.select(index.id_col, "__mtq", "__mtq_l2",
+                                   "__mtq_cn"), Qtoks, decode, zeros, ones)
 
     # scalar (MaxSimSq)
     lo = index.lo
     scale = (index.hi - index.lo) / 255.0
-    dim = len(lo)
-    Qtoks = [np.asarray([list(t) for t in q], dtype=np.float64)
-             for q in queries]
-    if cosine:
-        Qtoks = [_norm_rows(Q) for Q in Qtoks]
 
     def decode(flats):
-        Tm = flats[0].flatten().to_numpy(zero_copy_only=False) \
-            .reshape(-1, dim).astype(np.float64)
-        Tm = (Tm + 128.0) * scale + lo
+        Tm = _sq_decode(flats[0], lo, scale)
         return _norm_rows(Tm) if cosine else Tm
 
-    return ["__msq"], Qtoks, decode, zeros, ones
+    return (index.codes.select(index.id_col, "__msq"), _raw_tokens(),
+            decode, zeros, ones)
 
 
 def maxsim_knn_quant(
@@ -1507,109 +1470,17 @@ def maxsim_quant_coarse_batch(index, queries: Sequence[Sequence[Sequence[float]]
     Arrow batch before the per-batch cut (copies from different
     partitions can coalesce into one batch; two copies of one doc must
     not occupy two of its kk slots and push a distinct doc out) and
-    once more across batches on the narrow (qid, id) frame."""
+    once more across batches on the narrow (qid, id) frame.
+
+    ``index`` may also be an (id, multivector) float-token DataFrame —
+    the identity decode, exact MaxSim (:func:`maxsim_knn_batch`)."""
     from pyspark.sql.window import Window
 
-    code_cols, Qtoks, decode, offsets, scales = _mv_quant_prep(
+    sel, Qtoks, decode, offsets, scales = _mv_quant_prep(
         index, queries, metric)
-    Qall = np.concatenate(Qtoks, axis=0)
-    # per-query token column offsets for the reduceat over columns
-    qstarts = np.cumsum([0] + [len(t) for t in Qtoks[:-1]])
-    nq = len(Qtoks)
-
-    sc = index.codes.sparkSession.sparkContext
-    # broadcast only the plain arrays (sc.broadcast pickles with the
-    # stock pickler, which can't take the per-kind decode closure); the
-    # decode fn + its encoder state ride the cloudpickled task closure
-    bq = sc.broadcast((Qall, qstarts, offsets, scales))
-    sel = index.codes.select(index.id_col, *code_cols)
-    id_col = index.id_col
-    out_schema = T.StructType([
-        T.StructField("__qid", T.LongType()),
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-    ncols = len(code_cols)
-
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        Qm, qs, offs, scl = bq.value
-        dec = decode
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            flats = []
-            outer_off = None
-            for ci in range(1, 1 + ncols):
-                col = batch.column(ci)
-                if isinstance(col, pa.ChunkedArray):
-                    col = col.combine_chunks()
-                if outer_off is None:
-                    outer_off = col.offsets.to_numpy(zero_copy_only=False)
-                flats.append(col.flatten())
-            tok_counts = np.diff(outer_off)
-            Tm = dec(flats)
-            starts = outer_off[:-1] - outer_off[0]
-            assert (tok_counts > 0).all()  # empties filtered at build
-            # chunk the query-token columns: the full (batch_tokens x
-            # all_qtokens) score matrix would be ~100s of MB per worker
-            # at 64 queries (first-rep GC thrash measured 40s); per-doc
-            # segment max reduces each chunk to (docs, chunk) before the
-            # next chunk's BLAS call
-            CHUNK = 128
-            blocks = []
-            for c0 in range(0, Qm.shape[0], CHUNK):
-                S = Tm @ Qm[c0:c0 + CHUNK].T    # (tokens, <=CHUNK)
-                blocks.append(np.maximum.reduceat(S, starts, axis=0))
-            M = blocks[0] if len(blocks) == 1 \
-                else np.concatenate(blocks, axis=1)     # (docs, qtokens)
-            scores = np.add.reduceat(M, qs, axis=1)     # (docs, queries)
-            # per-query affine part + final scale (identity except asym
-            # BQ, where it is the single 1/ranges division of the
-            # integer-exact pipeline — see _mv_quant_prep)
-            scores = (scores + offs) * scl
-            if dedup_ids:
-                # invlist copies score identically — keep one per doc
-                # BEFORE the cut so copies can't crowd out distinct docs
-                _, keep = np.unique(ids, return_index=True)
-                if len(keep) < n:
-                    ids = ids[keep]
-                    scores = scores[keep]
-                    n = len(keep)
-            kk = min(k, n)  # dedup'd batch size
-            if kk < n:
-                # per-batch top-k must follow the SAME total order as
-                # the final window — (score desc, id asc) — or tied
-                # boundary docs (endemic for integer-valued binary
-                # coarse scores) get dropped by argpartition's arbitrary
-                # tie choice before the window ever sees them
-                sel_rows, sel_q = [], []
-                for j in range(nq):
-                    s = scores[:, j]
-                    part = np.argpartition(-s, kk - 1)[:kk]
-                    kth = s[part].min()
-                    strict = np.where(s > kth)[0]
-                    tied = np.where(s == kth)[0]
-                    need = kk - len(strict)
-                    tied = tied[np.argsort(ids[tied], kind="stable")][:need]
-                    rows_j = np.concatenate([strict, tied])
-                    sel_rows.append(rows_j)
-                    sel_q.append(np.full(len(rows_j), j, dtype=np.int64))
-                rows = np.concatenate(sel_rows)
-                qid = np.concatenate(sel_q)
-            else:
-                rows = np.tile(np.arange(n), nq)
-                qid = np.repeat(np.arange(nq, dtype=np.int64), n)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid), pa.array(ids[rows]),
-                 pa.array(scores[rows, qid], type=pa.float64())],
-                names=["__qid", id_col, "score"],
-            )
-
-    scored = sel.mapInArrow(score_batches, out_schema)
+    id_col = sel.columns[0]
+    scored = _maxsim_scan(sel, Qtoks, decode, offsets, scales, k,
+                          dedup_ids)
     if dedup_ids:
         # copies in DIFFERENT batches survive the kernel dedup; scores
         # are identical, so dedup the narrow (qid, id, score) frame
@@ -1623,66 +1494,57 @@ def maxsim_quant_coarse_batch(index, queries: Sequence[Sequence[Sequence[float]]
 def maxsim_quant_pair_topk(qidx, pairs: DataFrame,
                            queries: Sequence[Sequence[Sequence[float]]],
                            *, k: int, metric: str = "dot") -> DataFrame:
-    """Coarse MaxSim over a (qid, id) candidate PAIR set read from
-    QUANTIZED token storage of any kind — the coarse half of the fused
-    composed multivector batch (r12): the code table joins the pair set
-    once (the join lands on 1-4 bit/dim codes, never float tokens), each
-    Arrow batch decodes its rows' tokens via the per-kind hook and runs
-    one BLAS call per qid group, scoring every candidate ONLY against
-    its own query (so results equal the per-request composed plans).
-    Returns per-qid (score desc, id) rank<=k."""
+    """THE MaxSim pair kernel: MaxSim over a (qid, id) candidate PAIR set
+    — the coarse half of the fused composed multivector batch (r12) over
+    QUANTIZED token storage of any kind, and the exact rescore half over
+    float tokens (``qidx`` an (id, multivector) DataFrame, see
+    :func:`maxsim_pair_topk`). The token table joins the pair set once
+    (for codes the join lands on 1-4 bit/dim codes, never float tokens),
+    each Arrow batch decodes its rows' tokens via the per-kind hook and
+    scores each qid group with :func:`maxsim_scores`, every candidate
+    ONLY against its own query (so results equal the per-request
+    plans). Returns per-qid (score desc, id) rank<=k."""
     from pyspark.sql.window import Window
 
-    code_cols, Qtoks, decode, offsets, scales = _mv_quant_prep(
+    sel, Qtoks, decode, offsets, scales = _mv_quant_prep(
         qidx, queries, metric)
-    id_col = qidx.id_col
-    sel = qidx.codes.select(id_col, *code_cols)
-    joined = sel.join(pairs, id_col).select("__qid", id_col, *code_cols)
+    id_col = sel.columns[0]
+    joined = sel.join(pairs, id_col).select("__qid", *sel.columns)
     out_schema = T.StructType([
         T.StructField("__qid", T.LongType()),
         T.StructField(id_col, sel.schema[id_col].dataType),
         T.StructField("score", T.DoubleType()),
     ])
-    ncols = len(code_cols)
-    bq = joined.sparkSession.sparkContext.broadcast((offsets, scales))
+    ncols = len(sel.columns) - 1
+    bq = joined.sparkSession.sparkContext.broadcast(
+        (Qtoks, offsets, scales))
+    qstart = np.zeros(1, dtype=np.int64)
 
     def score_batches(batches: Iterator) -> Iterator:
         import pyarrow as pa
 
-        offs, scl = bq.value
+        Qs, offs, scl = bq.value
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
             qids = batch.column(0).to_numpy(zero_copy_only=False)
             ids = batch.column(1).to_numpy(zero_copy_only=False)
-            flats = []
-            outer_off = None
-            for ci in range(2, 2 + ncols):
-                col = batch.column(ci)
-                if isinstance(col, pa.ChunkedArray):
-                    col = col.combine_chunks()
-                if outer_off is None:
-                    outer_off = col.offsets.to_numpy(zero_copy_only=False)
-                flats.append(col.flatten())
+            flats, tok_off = _batch_tokens(batch, 2, ncols)
             Tm = decode(flats)
-            starts = outer_off[:-1] - outer_off[0]
+            tok_off = tok_off - tok_off[0]
+            lens = np.diff(tok_off)
             out = np.empty(n, dtype=np.float64)
             for qi in np.unique(qids):
                 mask = np.where(qids == qi)[0]
-                Qm = Qtoks[int(qi)]
-                segs = [np.arange(starts[i],
-                                  starts[i] + (outer_off[i + 1]
-                                               - outer_off[i]))
-                        for i in mask]
-                rows = np.concatenate(segs)
-                S = Tm[rows] @ Qm.T
-                lens = np.array([len(s) for s in segs])
-                st = np.concatenate([[0], np.cumsum(lens)[:-1]])
-                M = np.maximum.reduceat(S, st, axis=0)
+                # token rows of just this qid's docs
+                rows = np.concatenate([np.arange(tok_off[i], tok_off[i + 1])
+                                       for i in mask])
+                st = np.concatenate([[0], np.cumsum(lens[mask])[:-1]])
+                s = maxsim_scores(Tm[rows], st, Qs[int(qi)], qstart)[:, 0]
                 # offset + scale: identity except asym BQ's one final
                 # 1/ranges division (integer-exact pipeline)
-                out[mask] = (M.sum(axis=1) + offs[int(qi)]) * scl[int(qi)]
+                out[mask] = (s + offs[int(qi)]) * scl[int(qi)]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(qids), pa.array(ids),
                  pa.array(out, type=pa.float64())],
@@ -1713,15 +1575,8 @@ def maxsim_ivf_candidate_pairs(
     candidate set bit-for-bit."""
     cluster_q: dict[int, list[int]] = {}
     for qi, q in enumerate(queries):
-        Qm = np.asarray([list(t) for t in q], dtype=np.float64)
-        if metric == "cosine":
-            n = np.linalg.norm(Qm, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            Qm = Qm / n
-        d2 = ((Qm[:, None, :] - route_index.centroids[None, :, :]) ** 2) \
-            .sum(axis=2)
-        per_tok = np.argsort(d2, axis=1)[:, :nprobe]
-        for c in {int(c) for row in per_tok for c in row}:
+        for c in _probe_clusters(route_index, q, nprobe=nprobe,
+                                 metric=metric):
             cluster_q.setdefault(c, []).append(qi)
     probes = sorted(cluster_q)
     flat = []
@@ -1761,15 +1616,8 @@ def maxsim_ivf_capped_pairs(
     qdata = []
     union: set[int] = set()
     for q in queries:
-        Qm = np.asarray([list(t) for t in q], dtype=np.float64)
-        if metric == "cosine":
-            n = np.linalg.norm(Qm, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            Qm = Qm / n
-        d2 = ((Qm[:, None, :] - route_index.centroids[None, :, :]) ** 2) \
-            .sum(axis=2)
-        per_tok = np.argsort(d2, axis=1)[:, :nprobe]
-        probes = sorted({int(c) for row in per_tok for c in row})
+        Qm, probes = _probe_clusters(route_index, q, nprobe=nprobe,
+                                     metric=metric, return_q=True)
         union.update(probes)
         S = Qm @ route_index.centroids.T  # (tq, n_clusters)
         qdata.append((probes, S))
@@ -1829,81 +1677,13 @@ def maxsim_pair_topk(points: DataFrame, pairs: DataFrame,
                      *, metric: str = "dot", k: int,
                      mv_col: str = "mv", id_col: str = "id") -> DataFrame:
     """Exact MaxSim over a (qid, id) candidate PAIR set — the rescore
-    half of the batched quantized MaxSim path: the float corpus is
-    semi-joined to the candidate union once, each Arrow batch groups its
-    rows by qid and runs one BLAS call per (qid group) against that
-    query's token matrix. Returns per-qid (score desc, id) top-k."""
-    from pyspark.sql.window import Window
-
-    Qtoks = []
-    for q in queries:
-        Qm = np.asarray([list(t) for t in q], dtype=np.float64)
-        if metric == "cosine":
-            nq = np.linalg.norm(Qm, axis=1, keepdims=True)
-            nq[nq == 0] = 1.0
-            Qm = Qm / nq
-        Qtoks.append(Qm)
-    sc = points.sparkSession.sparkContext
-    bq = sc.broadcast(Qtoks)
-
-    joined = points.select(id_col, mv_col) \
-        .join(F.broadcast(pairs), id_col) \
-        .select("__qid", id_col, mv_col)
-    out_schema = T.StructType([
-        T.StructField("__qid", T.LongType()),
-        T.StructField(id_col, joined.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        Qs = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            qids = batch.column(0).to_numpy(zero_copy_only=False)
-            ids = batch.column(1).to_numpy(zero_copy_only=False)
-            mv = batch.column(2)
-            if isinstance(mv, pa.ChunkedArray):
-                mv = mv.combine_chunks()
-            inner = mv.flatten()
-            outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-            flat = inner.flatten().to_numpy(zero_copy_only=False)
-            dim = Qs[0].shape[1]
-            Tm = flat.reshape(-1, dim).astype(np.float64)
-            if metric == "cosine":
-                norms = np.linalg.norm(Tm, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                Tm = Tm / norms
-            starts = outer_off[:-1] - outer_off[0]
-            out = np.empty(n, dtype=np.float64)
-            for qi in np.unique(qids):
-                mask = np.where(qids == qi)[0]
-                Qm = Qs[int(qi)]
-                # token rows of just this qid's docs
-                segs = [np.arange(starts[i],
-                                  starts[i] + (outer_off[i + 1]
-                                               - outer_off[i]))
-                        for i in mask]
-                rows = np.concatenate(segs)
-                S = Tm[rows] @ Qm.T
-                lens = np.array([len(s) for s in segs])
-                st = np.concatenate([[0], np.cumsum(lens)[:-1]])
-                M = np.maximum.reduceat(S, st, axis=0)
-                out[mask] = M.sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qids), pa.array(ids),
-                 pa.array(out, type=pa.float64())],
-                names=["__qid", id_col, "score"],
-            )
-
-    scored = joined.mapInArrow(score_batches, out_schema)
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("score").desc(), F.col(id_col).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k).drop("rank"))
+    half of the batched quantized MaxSim path: the pair kernel
+    (:func:`maxsim_quant_pair_topk`) over float tokens, the candidate
+    pairs broadcast into one join with the float corpus. Returns
+    per-qid (score desc, id) top-k."""
+    return maxsim_quant_pair_topk(
+        points.select(id_col, mv_col), F.broadcast(pairs), queries, k=k,
+        metric=metric).drop("rank")
 
 
 def maxsim_knn_batch(points: DataFrame,
@@ -1911,87 +1691,13 @@ def maxsim_knn_batch(points: DataFrame,
                      *, k: int = 10, metric: str = "dot",
                      mv_col: str = "mv", id_col: str = "id") -> DataFrame:
     """Exact MaxSim for a BATCH of query multivectors in ONE corpus scan
-    — the multivector analogue of knn_batch's shared matmul: all query
-    tokens concatenate into one matrix, each Arrow batch runs chunked
-    BLAS + two reduceat passes (per-doc segment max, per-query token
-    sum), per-batch per-query top-k bounds the shuffle, and the final
-    window makes the per-query (score desc, id) ranking exact. Returns
+    — the multivector analogue of knn_batch's shared matmul, i.e. the
+    scan kernel with the identity decode
+    (:func:`maxsim_quant_coarse_batch` over the float tokens). Returns
     (__qid, id, score, rank<=k); scores are EXACT MaxSim (no rescore
     stage). 64 sequential maxsim_knn calls read the corpus 64 times;
     this reads it once."""
-    from pyspark.sql.window import Window
-
     if metric not in ("dot", "cosine"):
         raise ValueError("maxsim supports dot/cosine")
-    Qtoks = []
-    for q in queries:
-        Qm = np.asarray([list(t) for t in q], dtype=np.float64)
-        if metric == "cosine":
-            nq = np.linalg.norm(Qm, axis=1, keepdims=True)
-            nq[nq == 0] = 1.0
-            Qm = Qm / nq
-        Qtoks.append(Qm)
-    Qall = np.concatenate(Qtoks, axis=0)
-    qstarts = np.cumsum([0] + [len(t) for t in Qtoks[:-1]])
-    nq = len(Qtoks)
-    dim = Qall.shape[1]
-    sc = points.sparkSession.sparkContext
-    bq = sc.broadcast((Qall, qstarts))
-
-    base = points.filter(
-        F.col(mv_col).isNotNull() & (F.size(mv_col) > 0))
-    sel = base.select(id_col, mv_col)
-    out_schema = T.StructType([
-        T.StructField("__qid", T.LongType()),
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-    cosine = metric == "cosine"
-
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        Qm, qs = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            mv = batch.column(1)
-            if isinstance(mv, pa.ChunkedArray):
-                mv = mv.combine_chunks()
-            inner = mv.flatten()
-            outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-            flat = inner.flatten().to_numpy(zero_copy_only=False)
-            Tm = flat.reshape(-1, dim).astype(np.float64, copy=False)
-            if cosine:
-                norms = np.linalg.norm(Tm, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                Tm = Tm / norms
-            starts = outer_off[:-1] - outer_off[0]
-            CHUNK = 128
-            blocks = []
-            for c0 in range(0, Qm.shape[0], CHUNK):
-                S = Tm @ Qm[c0:c0 + CHUNK].T
-                blocks.append(np.maximum.reduceat(S, starts, axis=0))
-            M = blocks[0] if len(blocks) == 1 \
-                else np.concatenate(blocks, axis=1)
-            scores = np.add.reduceat(M, qs, axis=1)
-            kk = min(k, n)
-            if kk < n:
-                part = np.argpartition(-scores, kk - 1, axis=0)[:kk]
-            else:
-                part = np.tile(np.arange(n)[:, None], (1, nq))
-            rows = part.ravel(order="F")
-            qid = np.repeat(np.arange(nq, dtype=np.int64), part.shape[0])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid), pa.array(ids[rows]),
-                 pa.array(scores[rows, qid], type=pa.float64())],
-                names=["__qid", id_col, "score"],
-            )
-
-    scored = sel.mapInArrow(score_batches, out_schema)
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("score").desc(), F.col(id_col).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return maxsim_quant_coarse_batch(points.select(id_col, mv_col),
+                                     queries, k, metric=metric)

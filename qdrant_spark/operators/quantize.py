@@ -24,11 +24,10 @@ from dataclasses import dataclass
 from typing import Any, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from qdrant_spark.operators.knn import knn
+from qdrant_spark.operators.knn import knn, score_order
 from qdrant_spark.functions.distances import larger_is_better
 
 
@@ -160,7 +159,7 @@ def sq_search(
     ``rescore: false`` fast path)."""
     n_coarse = max(k, int(np.ceil(k * oversampling)))
     from qdrant_spark.operators.knn import (
-        ARROW_DISPATCH_BYTES, _matmul_knn, _plan_size_bytes,
+        ARROW_DISPATCH_BYTES, _plan_size_bytes,
     )
 
     src = _coarse_src(index.codes, index.full, flt, index.id_col)
@@ -177,25 +176,8 @@ def sq_search(
         # scorer — the JVM decode-transform path materializes 8 B/dim
         # doubles through an interpreted HOF before conversion. Identical
         # doubles: (c+128)*scale+lo is the same two IEEE ops either side.
-        lo = index.lo
-        scale = (index.hi - index.lo) / 255.0
-
-        def dec(vec, n):
-            import pyarrow as pa
-
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            M = flat.reshape(n, len(lo)).astype(np.float64)
-            return (M + 128.0) * scale + lo
-
-        coarse = _matmul_knn(
-            src, None, metric=metric, k=n_coarse, vec_col="__sq",
-            id_col=index.id_col, qid_col="__qid", qvec_col="__qvec",
-            score_threshold=None,
-            q_data=([0], np.asarray([[float(x) for x in query_vector]])),
-            vec_decode=dec,
-        ).select(index.id_col, "score")
+        coarse = _coarse_matmul(index, src, metric, [0], [query_vector],
+                                n_coarse).select(index.id_col, "score")
     else:
         coarse_pts = src.withColumn("__dec", index.decoded_col())
         coarse = knn(
@@ -205,11 +187,20 @@ def sq_search(
         )
     if not rescore:
         return coarse.orderBy(
-            F.col("score").desc() if larger_is_better(metric) else F.col("score"),
-            F.col(index.id_col),
-        ).limit(k)
+            *score_order(metric, id_col=index.id_col)).limit(k)
+    return _exact_rescore(index, index.codes, coarse, query_vector,
+                          k=k, metric=metric)
+
+
+def _exact_rescore(index, codes: DataFrame, coarse: DataFrame,
+                   query_vector: Sequence[float], *, k: int,
+                   metric: str) -> DataFrame:
+    """The shared second stage of every dense quantized search: the
+    coarse survivors broadcast-semi-join the full-precision frame (the
+    split-storage ``full`` table, else the in-memory ``codes`` frame
+    that still carries the floats) and score exactly."""
     cand_ids = F.broadcast(coarse.select(index.id_col))
-    rescore_src = index.full if index.full is not None else index.codes
+    rescore_src = index.full if index.full is not None else codes
     candidates = rescore_src.join(cand_ids, index.id_col, "left_semi")
     return knn(
         candidates, query_vector, metric=metric, k=k,
@@ -626,14 +617,8 @@ def pq_search(
             coarse.limit(k)
             .select(F.col(index.id_col), F.col("__coarse").alias("score"))
         )
-    cand_ids = F.broadcast(coarse.select(index.id_col))
-    rescore_src = index.full if index.full is not None else index.codes
-    candidates = rescore_src.join(cand_ids, index.id_col, "left_semi")
-    return knn(
-        candidates, query_vector, metric=metric, k=k,
-        vec_col=index.vec_col, id_col=index.id_col,
-        select=[index.id_col, "score"],
-    )
+    return _exact_rescore(index, index.codes, coarse, query_vector,
+                          k=k, metric=metric)
 
 
 # --------------------------------------------------------------------------
@@ -881,6 +866,7 @@ def _tq_encode_columns(base: DataFrame, vec_col: str, *, bits: float,
     """Attach ``__tq/__tq_l2/__tq_cn`` for FROZEN rotation + EC state —
     shared by the build pass and the incremental encode of new rows
     (encode_quant). One Arrow-batched pass, no training."""
+    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     bpc = 1 if bits in (1, 1.5) else int(bits)
@@ -891,7 +877,7 @@ def _tq_encode_columns(base: DataFrame, vec_col: str, *, bits: float,
     shift_b = ec_shift if ec_shift is not None else np.zeros(padded_dim)
     scale_b = ec_scale if ec_scale is not None else np.ones(padded_dim)
 
-    def _encode(s: pd.Series) -> pd.DataFrame:
+    def _encode(s):
         if len(s) == 0:
             return pd.DataFrame({"codes": pd.Series([], dtype=object),
                                  "l2": pd.Series([], dtype=np.float64),
@@ -936,78 +922,28 @@ def tq_search(
     """Two-stage TurboQuant search. Coarse stage is asymmetric: the query
     stays full-precision in rotated space; each stored vector is
     reconstructed as ``centroids[codes] * (l2 / centroid_norm)`` — the
-    reference's renorm scoring (quantization.rs:290-316) — and scored with
-    one BLAS matvec per Arrow batch. Cosine/dot/euclid derive from the
-    rotation-invariant inner product; manhattan dequantizes and applies
-    the inverse rotation per candidate (the reference's L1 slow path,
-    EncodedQueryTQ.query, mod.rs:110-112). Then exact rescore of
-    ``k*oversampling`` candidates on the original vectors."""
-    from pyspark.sql.functions import pandas_udf
-
+    reference's renorm scoring (quantization.rs:290-316) — and scored by
+    the shared block-matmul kernel (one BLAS call per Arrow batch,
+    :func:`_quant_scan_setup`'s turbo decode). Cosine/dot/euclid score in
+    rotated space (the rotation preserves inner products and lengths);
+    manhattan dequantizes and applies the inverse rotation (the
+    reference's L1 slow path, EncodedQueryTQ.query, mod.rs:110-112).
+    Then exact rescore of ``k*oversampling`` candidates on the original
+    vectors."""
     if metric not in ("cosine", "dot", "euclid", "manhattan"):
         raise ValueError(f"unknown metric {metric!r}")
-    q = np.asarray(query_vector, dtype=np.float64)
-    if len(q) != index.dim:
-        raise ValueError(f"query dim {len(q)} != index dim {index.dim}")
-    bpc = index.bits_per_code
-    centroids = _TQ_CENTROIDS[bpc]
-    pd_, dim_, seed_ = index.padded_dim, index.dim, index.seed
-    params = _tq_rotation_params(pd_, seed_)
-    qpad = np.zeros(pd_, dtype=np.float64)
-    qpad[:dim_] = q
-    q_rot = _tq_rotate(qpad[None, :], params)[0]
-    l2_q = float(np.linalg.norm(q))
-    ec_shift = index.ec_shift if index.ec_shift is not None else None
-    ec_scale = index.ec_scale if index.ec_scale is not None else None
-
-    def _score(codes_s: pd.Series, l2_s: pd.Series, cn_s: pd.Series) -> pd.Series:
-        if len(codes_s) == 0:
-            return pd.Series([], dtype=np.float64)
-        raw = np.frombuffer(b"".join(codes_s), dtype=np.uint8)
-        raw = raw.reshape(len(codes_s), -1)
-        idx = _tq_unpack(raw, bpc, pd_)
-        l2 = l2_s.to_numpy(dtype=np.float64)
-        cn = np.maximum(cn_s.to_numpy(dtype=np.float64), 1e-12)
-        C = centroids[idx]                      # (n, padded_dim) reconstruction
-        if ec_scale is not None:
-            # TQ+ revert: x_hat = centroid * scale + shift, per coordinate
-            C = C * ec_scale + ec_shift
-        if metric == "manhattan":
-            approx = _tq_unrotate(C * (l2 / cn)[:, None], params)[:, :dim_]
-            return pd.Series(np.abs(approx - q).sum(axis=1))
-        raw_dot = C @ q_rot                     # one BLAS matvec per batch
-        if metric == "dot":
-            return pd.Series(raw_dot * l2 / cn)
-        if metric == "cosine":
-            return pd.Series(raw_dot / (cn * max(l2_q, 1e-12)))
-        d2 = l2 * l2 + l2_q * l2_q - 2.0 * raw_dot * l2 / cn
-        return pd.Series(np.sqrt(np.maximum(d2, 0.0)))
-
-    score_udf = pandas_udf(_score, "double")
-    pts = _coarse_src(index.codes, index.full, flt, index.id_col)
+    if len(query_vector) != index.dim:
+        raise ValueError(
+            f"query dim {len(query_vector)} != index dim {index.dim}")
+    src = _coarse_src(index.codes, index.full, flt, index.id_col)
     n_coarse = max(k, int(np.ceil(k * oversampling)))
-    order = F.col("__coarse").desc() if larger_is_better(metric) else F.col("__coarse")
-    coarse = (
-        pts.withColumn(
-            "__coarse",
-            score_udf(F.col("__tq"), F.col("__tq_l2"), F.col("__tq_cn")),
-        )
-        .orderBy(order, F.col(index.id_col))
-        .limit(n_coarse)
-    )
+    coarse = _coarse_matmul(index, src, metric, [0], [query_vector],
+                            n_coarse).select(index.id_col, "score")
     if not rescore:
-        return (
-            coarse.limit(k)
-            .select(F.col(index.id_col), F.col("__coarse").alias("score"))
-        )
-    cand_ids = F.broadcast(coarse.select(index.id_col))
-    rescore_src = index.full if index.full is not None else index.codes
-    candidates = rescore_src.join(cand_ids, index.id_col, "left_semi")
-    return knn(
-        candidates, query_vector, metric=metric, k=k,
-        vec_col=index.vec_col, id_col=index.id_col,
-        select=[index.id_col, "score"],
-    )
+        return coarse.orderBy(
+            *score_order(metric, id_col=index.id_col)).limit(k)
+    return _exact_rescore(index, index.codes, coarse, query_vector,
+                          k=k, metric=metric)
 
 
 def bq_query_bits(index: BqIndex, query_vector: Sequence[float]) -> np.ndarray:
@@ -1024,7 +960,7 @@ def bq_bits_np(vector: Sequence[float], means: np.ndarray,
     """NumPy mirror of :func:`_bq_code_expr`'s bit derivation for a
     single vector — the same function encodes storage rows and
     same-as-storage queries (encode_vector, encoded_vectors_binary.rs);
-    also used to encode multivector query TOKENS (maxsim_knn_bq)."""
+    also encodes multivector query TOKENS (multivec._mv_quant_prep)."""
     q = np.asarray(vector, dtype=np.float64)
     if encoding == "one_bit":
         return (q > means).astype(np.int64)
@@ -1194,14 +1130,149 @@ def bq_search(
             (F.lit(float(dim)) - scale * F.col("__ham").cast("double"))
             .alias("score"),
         )
-    cand_ids = F.broadcast(coarse.select(index.id_col))
-    rescore_src = index.full if index.full is not None else index.packed
-    candidates = rescore_src.join(cand_ids, index.id_col, "left_semi")
-    return knn(
-        candidates, query_vector, metric=metric, k=k,
-        vec_col=index.vec_col, id_col=index.id_col,
-        select=[index.id_col, "score"],
-    )
+    return _exact_rescore(index, index.packed, coarse, query_vector,
+                          k=k, metric=metric)
+
+
+# --------------------------------------------------------------------------
+# Arrow decode table: the per-kind hook of every Arrow-side coarse scan
+# --------------------------------------------------------------------------
+
+def _sq_decode(codes, lo: np.ndarray, scale: np.ndarray) -> np.ndarray:
+    """int8 affine decode of an Arrow ``list<tinyint>`` array (one row per
+    vector or token) to the (rows, dim) float64 matrix."""
+    flat = codes.flatten().to_numpy(zero_copy_only=False)
+    M = flat.reshape(-1, len(lo)).astype(np.float64)
+    return (M + 128.0) * scale + lo
+
+
+def _pq_reconstruct(codes, codebooks: np.ndarray) -> np.ndarray:
+    """x_hat of an Arrow ``list<tinyint>`` PQ code array by codebook
+    gather (ADC decomposes exactly over it)."""
+    m = codebooks.shape[0]
+    c = codes.flatten().to_numpy(zero_copy_only=False) \
+        .astype(np.int16).reshape(-1, m) + 128
+    return np.concatenate([codebooks[j][c[:, j]] for j in range(m)],
+                          axis=1)
+
+
+def _bq_unpack(words, ext_dim: int) -> np.ndarray:
+    """The 0/1 bits (rows, ext_dim) float64 of an Arrow ``list<bigint>``
+    packed-word array, in :func:`_pack_expr`'s layout."""
+    W = words.flatten().to_numpy(zero_copy_only=False) \
+        .astype(np.int64).reshape(len(words), -1).view(np.uint64)
+    bits = np.empty((W.shape[0], ext_dim), dtype=np.float64)
+    col = 0
+    for w in range(W.shape[1]):
+        nb = min(64, ext_dim - col)
+        sh = np.arange(nb - 1, -1, -1, dtype=np.uint64)
+        bits[:, col:col + nb] = ((W[:, w:w + 1] >> sh) & np.uint64(1))
+        col += nb
+    return bits
+
+
+def _tq_reconstruct(codes, l2, cn, bpc: int, padded_dim: int,
+                    ec_scale: np.ndarray | None = None,
+                    ec_shift: np.ndarray | None = None) -> np.ndarray:
+    """Renorm reconstruction in ROTATED space from Arrow arrays (binary
+    packed codes, l2 and centroid-norm extras): direction from the
+    codebook (TQ+ reverted), true length from the stored l2."""
+    raw_objs = codes.to_numpy(zero_copy_only=False)
+    raw = np.frombuffer(b"".join(raw_objs), dtype=np.uint8) \
+        .reshape(len(raw_objs), -1)
+    C = _TQ_CENTROIDS[bpc][_tq_unpack(raw, bpc, padded_dim)]
+    if ec_scale is not None:
+        C = C * ec_scale + ec_shift
+    cn = np.maximum(cn.to_numpy(zero_copy_only=False), 1e-12)
+    return C * (l2.to_numpy(zero_copy_only=False) / cn)[:, None]
+
+
+def _quant_scan_setup(index, metric: str, Qraw):
+    """The per-kind decode table of the dense Arrow coarse scans: a
+    ``prep`` hook deriving the scan frame from the codes table (turbo
+    packs its three columns into one struct), the scanned column, the
+    Arrow decode hook producing the matrix whose ``scan_metric`` scoring
+    equals the kind's coarse quantity, and the (possibly re-encoded)
+    query matrix. Scalar decodes the int8 affine; product reconstructs
+    x_hat (ADC decomposes exactly); binary unpacks words to ±1 so the dot
+    IS ``ext_dim - 2*hamming`` (the XOR scan's order and rescore=False
+    scale); turbo rebuilds the renormed rotated reconstruction
+    (manhattan un-rotates — the reference's L1 slow path,
+    mod.rs:110-112)."""
+    Q = np.asarray(Qraw, dtype=np.float64)
+    scan_metric = metric
+    prep = lambda f: f  # noqa: E731
+    if isinstance(index, SqIndex):
+        lo, scale = index.lo, (index.hi - index.lo) / 255.0
+
+        def dec(vec, n):
+            return _sq_decode(vec, lo, scale)
+
+        code_col = "__sq"
+    elif isinstance(index, PqIndex):
+        cb = index.codebooks
+
+        def dec(vec, n):
+            return _pq_reconstruct(vec, cb)
+
+        code_col = "__pq"
+    elif isinstance(index, BqIndex):
+        ext_dim = _bq_ext_dim(len(index.means), index.encoding)
+        if index.query_encoding in _BQ_QUERY_BITS:
+            # asymmetric query encoding: with query rows (2q - R)/R the
+            # ±1-bit dot equals ext_dim - 2*xor/ranges — the single-
+            # request asym path's exact rescore=False scale
+            rows = []
+            for q in Q:
+                codes, ranges = bq_scalar_query_codes(index, q)
+                rows.append((2.0 * codes - ranges) / ranges)
+            Q = np.asarray(rows, dtype=np.float64)
+        else:
+            Q = np.asarray([bq_query_bits(index, q) for q in Q],
+                           dtype=np.float64) * 2.0 - 1.0
+        scan_metric = "dot"
+
+        def dec(vec, n):
+            return _bq_unpack(vec, ext_dim) * 2.0 - 1.0
+
+        code_col = "__bq"
+    else:  # TqIndex
+        bpc = index.bits_per_code
+        pd_, dim_ = index.padded_dim, index.dim
+        params = _tq_rotation_params(pd_, index.seed)
+        ecs, ecsh = index.ec_scale, index.ec_shift
+        if metric != "manhattan":
+            Qpad = np.zeros((len(Q), pd_), dtype=np.float64)
+            Qpad[:, :dim_] = Q
+            Q = _tq_rotate(Qpad, params)
+
+        def dec(vec, n):
+            X = _tq_reconstruct(vec.field("__tq"), vec.field("__tq_l2"),
+                                vec.field("__tq_cn"), bpc, pd_, ecs, ecsh)
+            if metric == "manhattan":
+                return _tq_unrotate(X, params)[:, :dim_]
+            return X
+
+        prep = lambda f: f.withColumn(  # noqa: E731
+            "__tqz", F.struct("__tq", "__tq_l2", "__tq_cn"))
+        code_col = "__tqz"
+    return prep, code_col, dec, Q, scan_metric
+
+
+def _coarse_matmul(index, src: DataFrame, metric: str, qids,
+                   Qraw, k: int) -> DataFrame:
+    """Arrow coarse scan of ``src``'s codes for a batch of queries: the
+    decode table above feeding the block-matmul kernel
+    (knn._matmul_knn). Returns per-query ranked (__qid, id, score,
+    rank<=k)."""
+    from qdrant_spark.operators.knn import _matmul_knn
+
+    prep, code_col, dec, Q, scan_metric = _quant_scan_setup(
+        index, metric, Qraw)
+    return _matmul_knn(
+        prep(src), None, metric=scan_metric, k=k, vec_col=code_col,
+        id_col=index.id_col, qid_col="__qid", qvec_col="__qvec",
+        score_threshold=None, q_data=(list(qids), Q), vec_decode=dec)
 
 
 # --------------------------------------------------------------------------

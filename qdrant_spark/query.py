@@ -45,6 +45,10 @@ from typing import Any, NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the cluster-masked coarse kernel, bound here so the batched composed
+# quantized route resolves it through this module
+from qdrant_spark.operators.knn import _masked_code_topk
+
 DEFAULT_LIMIT = 10  # collection_query.rs:51
 MAX_DEPTH = 64
 
@@ -1912,134 +1916,6 @@ def _local_result_df(spark, rows: list, schema) -> DataFrame:
     return df
 
 
-def _quant_scan_setup(qh, metric: str, Qraw):
-    """Per-kind shared-scan pieces for a batched quantized group: a
-    ``prep`` hook deriving the scan frame from the codes table (turbo
-    packs its three columns into one struct), the scanned column, the
-    Arrow decode hook producing the matrix whose ``scan_metric`` scoring
-    equals the kind's single-request coarse quantity, and the (possibly
-    re-encoded) query matrix. Scalar decodes the int8 affine; product
-    reconstructs x_hat (ADC decomposes exactly); binary unpacks words to
-    ±1 so the dot IS ``ext_dim - 2*hamming`` (the XOR scan's order and
-    rescore=False scale); turbo rebuilds the renormed rotated
-    reconstruction (manhattan un-rotates — the reference's L1 slow
-    path, mod.rs:110-112)."""
-    import numpy as np
-
-    idx = qh.index
-    Q = Qraw
-    scan_metric = metric
-    prep = lambda f: f  # noqa: E731
-    if qh.kind == "scalar":
-        lo, scale = idx.lo, (idx.hi - idx.lo) / 255.0
-
-        def dec(vec, n, lo=lo, scale=scale):
-            import pyarrow as pa
-
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            M = flat.reshape(n, len(lo)).astype(np.float64)
-            return (M + 128.0) * scale + lo
-
-        code_col = "__sq"
-    elif qh.kind == "product":
-        cb = idx.codebooks  # (M, K, dsub)
-
-        def dec(vec, n, cb=cb):
-            import pyarrow as pa
-
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            codes = (flat.reshape(n, cb.shape[0]).astype(np.int16)
-                     + 128)
-            return np.concatenate(
-                [cb[m][codes[:, m]] for m in range(cb.shape[0])],
-                axis=1)
-
-        code_col = "__pq"
-    elif qh.kind == "binary":
-        from qdrant_spark.operators.quantize import (
-            _BQ_QUERY_BITS, _bq_ext_dim, bq_query_bits,
-            bq_scalar_query_codes,
-        )
-
-        ext_dim = _bq_ext_dim(len(idx.means), idx.encoding)
-        if idx.query_encoding in _BQ_QUERY_BITS:
-            # asymmetric query encoding: with query rows (2q - R)/R the
-            # ±1-bit dot equals ext_dim - 2*xor/ranges — the single-
-            # request asym path's exact rescore=False scale
-            rows = []
-            for q in Qraw:
-                codes, ranges = bq_scalar_query_codes(idx, q)
-                rows.append((2.0 * codes - ranges) / ranges)
-            Q = np.asarray(rows, dtype=np.float64)
-        else:
-            Q = np.asarray([bq_query_bits(idx, q) for q in Qraw],
-                           dtype=np.float64) * 2.0 - 1.0
-        scan_metric = "dot"
-
-        def dec(vec, n, ext_dim=ext_dim):
-            import pyarrow as pa
-
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            W = vec.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64).reshape(n, -1).view(np.uint64)
-            bits = np.empty((n, ext_dim), dtype=np.float64)
-            col = 0
-            for w in range(W.shape[1]):
-                nb = min(64, ext_dim - col)
-                sh = np.arange(nb - 1, -1, -1, dtype=np.uint64)
-                bits[:, col:col + nb] = \
-                    ((W[:, w:w + 1] >> sh) & np.uint64(1))
-                col += nb
-            return bits * 2.0 - 1.0
-
-        code_col = "__bq"
-    else:  # turbo
-        from qdrant_spark.operators.quantize import (
-            _TQ_CENTROIDS, _tq_rotate, _tq_rotation_params, _tq_unpack,
-            _tq_unrotate,
-        )
-
-        bpc = idx.bits_per_code
-        cents = _TQ_CENTROIDS[bpc]
-        pd_, dim_, seed_ = idx.padded_dim, idx.dim, idx.seed
-        params = _tq_rotation_params(pd_, seed_)
-        ecs, ecsh = idx.ec_scale, idx.ec_shift
-        if metric != "manhattan":
-            Qpad = np.zeros((len(Qraw), pd_), dtype=np.float64)
-            Qpad[:, :dim_] = Qraw
-            Q = _tq_rotate(Qpad, params)
-
-        def dec(vec, n, cents=cents, params=params):
-            import pyarrow as pa
-
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            raw = np.frombuffer(
-                b"".join(vec.field("__tq").to_pylist()),
-                dtype=np.uint8).reshape(n, -1)
-            l2 = vec.field("__tq_l2").to_numpy(zero_copy_only=False)
-            cn = np.maximum(
-                vec.field("__tq_cn").to_numpy(zero_copy_only=False),
-                1e-12)
-            C = cents[_tq_unpack(raw, bpc, pd_)]
-            if ecs is not None:
-                C = C * ecs + ecsh
-            X = C * (l2 / cn)[:, None]
-            if metric == "manhattan":
-                return _tq_unrotate(X, params)[:, :dim_]
-            return X
-
-        prep = lambda f: f.withColumn(  # noqa: E731
-            "__tqz", F.struct("__tq", "__tq_l2", "__tq_cn"))
-        code_col = "__tqz"
-    return prep, code_col, dec, Q, scan_metric
-
-
 def _quant_batch_params(planner, requests, idxs, qh):
     """Per-request (k, coarse width, rescore?) for a quantized batch
     group — the same arithmetic as the single-request leaf."""
@@ -2197,8 +2073,8 @@ def _batch_quant_indexed(planner: "QueryPlanner",
     """Batch-side quantized grouping: unfiltered single-leaf dense
     nearest requests on a quantized column — ALL FOUR kinds since r11 —
     are answered by ONE coarse Arrow scan over the codes (all queries
-    score per batch via the block matmul, per-kind decode in
-    :func:`_quant_scan_setup`) plus ONE pair-scored rescore over the
+    score per batch via the block matmul, per-kind decode from
+    quantize._quant_scan_setup) plus ONE pair-scored rescore over the
     union of candidate floats — value-identical per request to planning
     each alone (per-request oversampling, rescore, score_threshold,
     offset and limit applied after the shared scans). The quantized twin
@@ -2208,8 +2084,6 @@ def _batch_quant_indexed(planner: "QueryPlanner",
     exact / shard routing / ignore keep their own plan; columns with a
     cluster structure batch through :func:`_batch_quant_ivf_indexed`
     instead."""
-    import numpy as np
-
     groups: dict[str, list[int]] = {}
     for i, vc in _quant_batch_eligible(planner, requests, outs):
         if planner.quant_indexes.get(vc) is None \
@@ -2226,21 +2100,13 @@ def _batch_quant_indexed(planner: "QueryPlanner",
         ks, cs, rescores = _quant_batch_params(planner, requests, idxs, qh)
         if len(idxs) * max(cs.values()) > planner.fused_collect_max:
             continue
-        from qdrant_spark.operators.knn import _matmul_knn
+        from qdrant_spark.operators.quantize import _coarse_matmul
 
         idx = qh.index
-        Qraw = np.asarray(
-            [[float(x) for x in requests[i]["query"]["nearest"]]
-             for i in idxs])
-        prep, code_col, dec, Q, scan_metric = _quant_scan_setup(
-            qh, metric, Qraw)
-        coarse = _matmul_knn(
-            prep(qh.codes_frame()), None, metric=scan_metric,
-            k=max(cs.values()),
-            vec_col=code_col, id_col=idx.id_col, qid_col="__qid",
-            qvec_col="__qvec", score_threshold=None,
-            q_data=(idxs, Q), vec_decode=dec,
-        ).collect()
+        Qraw = [[float(x) for x in requests[i]["query"]["nearest"]]
+                for i in idxs]
+        coarse = _coarse_matmul(idx, qh.codes_frame(), metric, idxs, Qraw,
+                                max(cs.values())).collect()
         planner.last_plan_info["quant_batch_groups"] = \
             planner.last_plan_info.get("quant_batch_groups", 0) + 1
         by_req: dict[int, list] = {i: [] for i in idxs}
@@ -2250,84 +2116,6 @@ def _batch_quant_indexed(planner: "QueryPlanner",
                                            float(r["score"])))
         _finish_quant_group(planner, requests, idxs, outs, qh, metric,
                             ks, rescores, by_req)
-
-
-def _masked_code_topk(frame, *, code_col, id_col, qids, Q, cluster_q,
-                      k, metric, vec_decode):
-    """Cluster-masked batched coarse scan: ONE pass over the (already
-    probe-union-pruned) coded frame in which each cluster block scores
-    against ONLY the queries that probed it (the ann.ivf_search_batch
-    kernel, generalized with the per-kind decode hook). Exact per-query
-    (score direction, id) ranking via the final window, so candidates
-    match the single-request composed plan bit-for-bit."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-    from pyspark.sql.window import Window
-
-    from qdrant_spark.operators.knn import (
-        larger_is_better, score_block, score_order,
-    )
-
-    sc = frame.sparkSession.sparkContext
-    bq = sc.broadcast((np.asarray(qids), Q, cluster_q))
-    bigger = larger_is_better(metric)
-    sel = frame.select(id_col, code_col, "__cluster")
-    out_schema = T.StructType([
-        T.StructField("__qid", T.LongType()),
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-
-    def score_batches(batches):
-        import pyarrow as pa
-
-        qid_arr, Qm, cq = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            vec = batch.column(1)
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            M = vec_decode(vec, n)
-            cl = batch.column(2).to_numpy(zero_copy_only=False)
-            acc_q, acc_i, acc_s = [], [], []
-            for c in np.unique(cl):
-                qidx = cq.get(int(c))
-                if qidx is None or len(qidx) == 0:
-                    continue
-                mask = cl == c
-                S = score_block(M[mask], Qm[qidx], metric)
-                nb = S.shape[0]
-                kk = min(k, nb)
-                if kk < nb:
-                    part = np.argpartition(
-                        -S if bigger else S, kk - 1, axis=0)[:kk]
-                else:
-                    part = np.tile(np.arange(nb)[:, None],
-                                   (1, len(qidx)))
-                rows = part.ravel(order="F")
-                acc_q.append(np.repeat(qidx, part.shape[0]))
-                acc_i.append(ids[mask][rows])
-                acc_s.append(S[rows, np.repeat(np.arange(len(qidx)),
-                                               part.shape[0])])
-            if not acc_q:
-                continue
-            qi = np.concatenate(acc_q)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid_arr[qi]),
-                 pa.array(np.concatenate(acc_i)),
-                 pa.array(np.concatenate(acc_s), type=pa.float64())],
-                names=["__qid", id_col, "score"],
-            )
-
-    scored = sel.mapInArrow(score_batches, out_schema)
-    w = Window.partitionBy("__qid").orderBy(
-        *score_order(metric, id_col=id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
 
 
 def _batch_quant_ivf_indexed(planner: "QueryPlanner",
@@ -2369,15 +2157,14 @@ def _batch_quant_ivf_indexed(planner: "QueryPlanner",
         Qraw = np.asarray(
             [[float(x) for x in requests[i]["query"]["nearest"]]
              for i in idxs])
+        from qdrant_spark.operators.ann import _probe_map
+        from qdrant_spark.operators.quantize import _quant_scan_setup
+
         prep, code_col, dec, Q, scan_metric = _quant_scan_setup(
-            qh, metric, Qraw)
+            qh.index, metric, Qraw)
         # per-query probes in RAW vector space (same argsort as the
         # single-request quant_ivf_search), masks keyed by cluster
-        d = ((Qraw[:, None, :] - qih.centroids[None, :, :]) ** 2).sum(axis=2)
-        probes = np.argsort(d, axis=1)[:, :qih.nprobe]
-        used = sorted({int(c) for row in probes for c in row})
-        cluster_q = {int(c): np.where((probes == c).any(axis=1))[0]
-                     for c in used}
+        used, cluster_q = _probe_map(Qraw, qih.centroids, qih.nprobe)
         pruned = prep(qih.coded.filter(F.col("__cluster").isin(used)))
         coarse = _masked_code_topk(
             pruned, code_col=code_col, id_col=qih.id_col, qids=idxs,

@@ -127,3 +127,49 @@ def test_dbsf_direction_handling(spark):
     got = {r["id"]: r["score"] for r in rows}
     for k_ in exp:
         assert got[k_] == pytest.approx(exp[k_], rel=1e-12)
+
+
+def test_client_groups_come_back_best_group_first(spark):
+    """query_points_groups (and search_groups / recommend_groups, which
+    delegate to it) returns groups ordered by their best hit and hits
+    ordered best-first inside each group. Groups are named so that the
+    best-first order is the reverse of their name order."""
+    from qdrant_spark.client import QdrantSparkClient
+
+    names = ["a", "b", "c", "d", "e"]
+    offsets = [0.04, 0.0, 0.02, 0.06]  # in-group best is NOT the lowest id
+    pts = []
+    for j, g in enumerate(names):
+        base = 0.9 - 0.2 * j  # group "e" is nearest the query direction
+        for m, off in enumerate(offsets):
+            phi = base + off
+            pts.append({"id": 10 * (j + 1) + m,
+                        "vector": [math.cos(phi), math.sin(phi)],
+                        "payload": {"g": g}})
+    c = QdrantSparkClient(spark)
+    c.create_collection("grp_order", vectors_config={
+        "size": 2, "distance": "Cosine"})
+    c.upsert("grp_order", pts)
+
+    q = [1.0, 0.0]
+    by_group: dict = {}
+    for p in pts:
+        s = p["vector"][0]  # cosine to the unit query (1, 0)
+        by_group.setdefault(p["payload"]["g"], []).append((p["id"], s))
+    ranked = sorted(by_group.items(),
+                    key=lambda kv: (-max(s for _, s in kv[1]), kv[0]))
+    want = [(g, [i for i, _ in sorted(hits, key=lambda h: (-h[1], h[0]))[:3]])
+            for g, hits in ranked[:4]]
+    assert [g for g, _ in want] == ["e", "d", "c", "b"]
+
+    def got(res):
+        return [(g.id, [p.id for p in g.hits]) for g in res.groups]
+
+    assert got(c.query_points_groups("grp_order", group_by="g", query=q,
+                                     limit=4, group_size=3,
+                                     with_payload=False)) == want
+    assert got(c.search_groups("grp_order", q, group_by="g", limit=4,
+                               group_size=3)) == want
+    assert got(c.recommend_groups("grp_order", group_by="g",
+                                  positive=[q], limit=4,
+                                  group_size=3)) == want

@@ -4,6 +4,7 @@ DuckDB-oracle-gated — transitive exactness for the scan path."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -2059,3 +2060,126 @@ def test_leaf_degrade_matches_quant_only(spark):
     assert pi_off.get("maxsim_quant_ivf_leaves") == 1, pi_off
     assert not pi_off.get("maxsim_degraded_leaves"), pi_off
     assert got_deg == got_off
+
+
+# ---------------------------------------------------------------------------
+# One kernel contract: every token kind through the same scan and pair kernels
+# ---------------------------------------------------------------------------
+
+def _route_index(kind, mv_points):
+    from functools import partial
+
+    from qdrant_spark.operators.multivec import (
+        build_maxsim_bq, build_maxsim_pq, build_maxsim_sq, build_maxsim_tq,
+    )
+
+    if kind == "float":
+        return None
+    build = {"sq": build_maxsim_sq, "bq": build_maxsim_bq,
+             "pq": partial(build_maxsim_pq, n_subspaces=4,
+                           sample_tokens=4000),
+             "tq": partial(build_maxsim_tq, bits=4)}[kind]
+    return build(mv_points, mv_col="mv", id_col="vec_id")
+
+
+@pytest.mark.parametrize("metric", ["dot", "cosine"])
+@pytest.mark.parametrize("kind", ["float", "sq", "bq", "pq", "tq"])
+def test_route_equivalence_single_batch_pair(mv_points, embeddings, kind,
+                                             metric):
+    """The single-request path, the batch scan and the pair kernel return
+    identical (id, score) lists for the same queries, for every token
+    kind — only the per-kind decode differs between them. Float tokens
+    score exactly; code kinds return their coarse scores."""
+    from qdrant_spark.operators import multivec as MV
+
+    idx = _route_index(kind, mv_points)
+    rows = embeddings.limit(2).collect()
+    queries = []
+    for r in rows:
+        q = list(r["embedding"])
+        queries.append([q[i * 8:(i + 1) * 8] for i in range(8)])
+    k = 7
+
+    def ranked(frame, qid=None):
+        if qid is not None:
+            frame = frame.filter(frame["__qid"] == qid)
+        got = [(r["vec_id"], r["score"]) for r in frame.collect()]
+        return sorted(got, key=lambda h: (-h[1], h[0]))
+
+    if idx is None:
+        single = [ranked(MV.maxsim_knn(mv_points, q, k=k, metric=metric,
+                                       mv_col="mv", id_col="vec_id"))
+                  for q in queries]
+        batch = MV.maxsim_knn_batch(mv_points, queries, k=k, metric=metric,
+                                    mv_col="mv", id_col="vec_id")
+        ids = mv_points.select("vec_id")
+        pair = MV.maxsim_pair_topk(
+            mv_points, _all_pairs(ids, len(queries)), queries,
+            metric=metric, k=k, mv_col="mv", id_col="vec_id")
+    else:
+        alias = {"sq": MV.maxsim_knn_sq, "bq": MV.maxsim_knn_bq,
+                 "pq": MV.maxsim_knn_pq, "tq": MV.maxsim_knn_tq}[kind]
+        single = [ranked(alias(idx, q, k=k, metric=metric, rescore=False))
+                  for q in queries]
+        batch = MV.maxsim_quant_coarse_batch(idx, queries, k,
+                                             metric=metric)
+        pair = MV.maxsim_quant_pair_topk(
+            idx, _all_pairs(idx.codes.select("vec_id"), len(queries)),
+            queries, k=k, metric=metric)
+    for qi, want in enumerate(single):
+        assert len(want) == k
+        assert all(np.isfinite(s) for _, s in want)
+        assert ranked(batch, qi) == want, ("batch", qi)
+        assert ranked(pair, qi) == want, ("pair", qi)
+
+
+def _all_pairs(ids, n_queries):
+    """Every (qid, id) pair: the pair kernel then ranks the whole
+    corpus per query, like the scans."""
+    qids = ids.sparkSession.range(n_queries).withColumnRenamed("id", "__qid")
+    return qids.crossJoin(ids)
+
+
+def test_maxsim_knn_bq_honours_query_encoding(mv_points, q_mv):
+    """maxsim_knn_bq scores query tokens with the index's declared
+    ``query_encoding``, like the planner's maxsim_knn_quant."""
+    from qdrant_spark.operators.multivec import (
+        build_maxsim_bq, maxsim_knn_bq, maxsim_knn_quant,
+    )
+
+    idx = build_maxsim_bq(mv_points, mv_col="mv", id_col="vec_id",
+                          query_encoding="scalar8bits")
+    want = [(r["vec_id"], r["score"]) for r in maxsim_knn_quant(
+        idx, q_mv, k=10, rescore=False).collect()]
+    got = [(r["vec_id"], r["score"]) for r in maxsim_knn_bq(
+        idx, q_mv, k=10, rescore=False).collect()]
+    assert got == want
+
+
+def test_cosine_zero_query_token_single_equals_batch(spark, embeddings):
+    """A cosine multivector query with an all-zero token: the token
+    contributes 0 (it has no direction), so query_points and a
+    2-request query_batch_points return the same finite scores."""
+    from qdrant_spark.client import QdrantSparkClient
+
+    rows = embeddings.limit(60).collect()
+    pts = [{"id": int(r["vec_id"]),
+            "vector": {"late": [[float(x) for x in r["embedding"][i * 8:
+                                                                 (i + 1) * 8]]
+                                for i in range(3)]}} for r in rows]
+    c = QdrantSparkClient(spark)
+    c.create_collection("mvzero", vectors_config={
+        "late": {"size": 8, "distance": "Cosine",
+                 "multivector_config": {"comparator": "max_sim"}}})
+    c.upsert("mvzero", pts)
+    q = [[0.0] * 8] + pts[3]["vector"]["late"][:2]
+    single = c.query_points("mvzero", query=q, using="late", limit=5,
+                            with_payload=False)
+    batch = c.query_batch_points("mvzero", [
+        {"query": q, "using": "late", "limit": 5},
+        {"query": pts[7]["vector"]["late"], "using": "late", "limit": 5},
+    ])
+    got = [(p.id, p.score) for p in single.points]
+    assert len(got) == 5 and all(np.isfinite(s) for _, s in got)
+    assert got[0][0] == pts[3]["id"]
+    assert [(p.id, p.score) for p in batch[0].points] == got
